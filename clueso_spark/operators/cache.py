@@ -54,15 +54,7 @@ class BucketCacheManager:
         lock = self._lock_for(bucket)
         if lock.acquire(blocking=False):
             try:
-                new_df = builder().persist()
-                # eager materialization so queries hit memory, mirroring
-                # cacheTable (ref: SessionCacheManager.scala:30-31,53)
-                new_df.count()
-                old = self._entries.get(bucket)
-                self._entries[bucket] = _Entry(new_df, time.monotonic())
-                if old is not None:
-                    self._schedule_unpersist(old.df)
-                return new_df
+                return self._build(bucket, builder)
             finally:
                 lock.release()
         # rebuild in flight elsewhere: serve stale if we have it, else wait
@@ -75,10 +67,26 @@ class BucketCacheManager:
             current = self._entries.get(bucket)
             if current is not None:
                 return current.df
-            new_df = builder().persist()
+            return self._build(bucket, builder)
+
+    def _build(self, bucket: str, builder: Callable[[], DataFrame]) -> DataFrame:
+        """Build, persist and install a new entry; caller holds the bucket
+        lock. A replaced entry is unpersisted after ``cleanup_delay_s``; a
+        failed build is unpersisted at once, or Spark's cache would hand
+        its broken plan to the next build of the same paths."""
+        new_df = builder().persist()
+        try:
+            # eager materialization so queries hit memory, mirroring
+            # cacheTable (ref: SessionCacheManager.scala:30-31,53)
             new_df.count()
-            self._entries[bucket] = _Entry(new_df, time.monotonic())
-            return new_df
+        except Exception:
+            new_df.unpersist()
+            raise
+        old = self._entries.get(bucket)
+        self._entries[bucket] = _Entry(new_df, time.monotonic())
+        if old is not None:
+            self._schedule_unpersist(old.df)
+        return new_df
 
     def _schedule_unpersist(self, df: DataFrame) -> None:
         """Delayed async unpersist so in-flight queries finish

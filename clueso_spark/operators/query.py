@@ -16,9 +16,12 @@ scale-correct plan: each task keeps an n-row heap, the driver merges.
 
 from __future__ import annotations
 
-import json
+import contextlib
+import io
+from collections.abc import Callable
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,6 +29,10 @@ from clueso_spark.operators.cache import BucketCacheManager
 from clueso_spark.operators.merge import merged_latest_state
 from clueso_spark.schemas import RESULT_COLS, VERSION_KEY_CHAR
 from clueso_spark.sources.store import MetadataStore
+
+#: error class of a scan that reads a file deleted after its plan listed
+#: it -- what a search sees when a compaction purges landing under it
+_FILE_NOT_EXIST = "[FAILED_READ_FILE.FILE_NOT_EXIST]"
 
 
 @dataclass
@@ -48,15 +55,10 @@ class MetadataQueryExecutor:
         cache: BucketCacheManager | None = None,
         print_explain: bool = False,
         metrics=None,
-        merge_strategy: str = "window",
     ):
         self.spark = spark
         self.store = store
         self.cache = cache
-        #: latest-rows dedup strategy ("window" = reference-parity
-        #: row_number; "max_by" = sort-free hash aggregate, see
-        #: operators/merge.py:latest_rows)
-        self.merge_strategy = merge_strategy
         #: optional clueso_spark.metrics.SearchMetrics
         #: (ref: SearchMetricsSource.scala registers the same per-bucket
         #: search timings)
@@ -81,9 +83,7 @@ class MetadataQueryExecutor:
 
         def build() -> DataFrame:
             return merged_latest_state(
-                self.store.read_landing(bucket),
-                self.store.read_staging(bucket),
-                strategy=self.merge_strategy,
+                self.store.read_landing(bucket), self.store.read_staging(bucket)
             )
 
         if self.cache is not None:
@@ -104,9 +104,6 @@ class MetadataQueryExecutor:
         df = df.select([F.col(f"`{c}`") for c in RESULT_COLS])
         df = df.orderBy("key").limit(query.limit)
         if self.print_explain:
-            import contextlib
-            import io
-
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain(extended=True)
@@ -114,26 +111,42 @@ class MetadataQueryExecutor:
             print(self.last_explain)
         return df
 
+    def _materialize(
+        self, query: MetadataQuery, action: Callable[[DataFrame], list]
+    ) -> list:
+        """Plan ``query`` and run ``action`` on the page under the
+        per-bucket search timer -- the one place materializing callers get
+        metrics from.
+
+        A compaction may purge landing files after this plan listed them
+        (zero purge tolerance). That read fails with FILE_NOT_EXIST and is
+        re-planned once: landing is listed before staging and a purge
+        starts only after its staging write finished, so the new plan sees
+        the compacted rows. Any other error propagates. Ignoring missing
+        files instead would silently drop rows when staging was listed
+        before the compaction wrote it."""
+        timed = (
+            self.metrics.search_timed(query.bucket_name)
+            if self.metrics is not None
+            else contextlib.nullcontext()
+        )
+        with timed:
+            try:
+                return action(self.execute(query))
+            except Py4JJavaError as exc:
+                if _FILE_NOT_EXIST not in str(exc):
+                    raise
+                return action(self.execute(query))
+
     def execute_json(self, query: MetadataQuery) -> str:
         """Materialize a page as a JSON array string -- the reference's
         stdout/Livy contract (ref: SparkUtils.scala:79-97)."""
-        if self.metrics is not None:
-            with self.metrics.search_timed(query.bucket_name):
-                rows = self.execute(query).toJSON().take(query.limit)
-        else:
-            rows = self.execute(query).toJSON().take(query.limit)
+        rows = self._materialize(query, lambda df: df.toJSON().take(query.limit))
         return "[" + ",".join(rows) + "]"
 
     def execute_collected(self, query: MetadataQuery) -> list:
-        """Materialize a page as collected Rows, under the same
-        per-bucket metrics instrumentation execute_json gets -- the one
-        place the 'if metrics: search_timed' dance lives for
-        collect()-style callers (the HTTP XML path re-implemented it
-        once and new callers would silently miss metrics again)."""
-        if self.metrics is not None:
-            with self.metrics.search_timed(query.bucket_name):
-                return self.execute(query).collect()
-        return self.execute(query).collect()
+        """Materialize a page as collected Rows (the HTTP XML path)."""
+        return self._materialize(query, DataFrame.collect)
 
     def pages(self, query: MetadataQuery):
         """Iterate all pages via keyset pagination (each page re-queries with
@@ -150,7 +163,3 @@ class MetadataQueryExecutor:
             if len(rows) < query.limit:
                 return
             start = rows[-1]["key"]
-
-
-def rows_to_json(rows) -> str:
-    return json.dumps([r.asDict(recursive=True) for r in rows], default=str)

@@ -113,15 +113,14 @@ class MetadataStore:
     def _read_bucket(self, tier_root: str, bucket: str) -> DataFrame:
         """Partition-pruned per-bucket scan: read the bucket subdirectory
         directly with an explicit basePath so the partition columns survive
-        (ref: MetadataQueryExecutor.scala:141-147)."""
+        (ref: MetadataQueryExecutor.scala:141-147). A tier with no
+        directory yet is an empty file scan, planned in the JVM like the
+        non-empty one."""
         path = f"{tier_root}/bucket={bucket}"
+        reader = self.spark.read.schema(STORED_EVENT_SCHEMA)
         if not self.exists(path):
-            return self.spark.createDataFrame([], STORED_EVENT_SCHEMA)
-        return (
-            self.spark.read.schema(STORED_EVENT_SCHEMA)
-            .option("basePath", tier_root)
-            .parquet(path)
-        )
+            return reader.parquet()
+        return reader.option("basePath", tier_root).parquet(path)
 
     def read_landing(self, bucket: str) -> DataFrame:
         return self._read_bucket(self.landing, bucket)

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import json
+
+import pytest
+
 from clueso_spark.operators.compact import Compactor
 from clueso_spark.operators.query import MetadataQuery, MetadataQueryExecutor
 from clueso_spark.streaming.ingest import parse_events
@@ -246,3 +250,72 @@ def test_stale_lock_is_broken_fresh_lock_is_respected(spark, store):
     assert store.read_staging(BUCKET).count() == 15
     # lock released after the successful run
     assert not store.exists(c._lock_path(BUCKET))
+
+
+def test_compaction_keeps_opindex_ties_search_returns_one(spark, store):
+    """Two rows of one key tied on the winning opIndex: compaction's
+    dense_rank keeps both (ref: TableFilesCompactor.scala:162-167), while
+    search's row_number returns exactly one (ref:
+    MetadataQueryExecutor.scala:177-180). The older version is dropped."""
+    lines = [
+        wire_event(op(1), "put", BUCKET, "k", put_doc("k", BUCKET, **{"content-length": 1})),
+        wire_event(op(2), "put", BUCKET, "k", put_doc("k", BUCKET, **{"content-length": 2})),
+        wire_event(op(2), "put", BUCKET, "k", put_doc("k", BUCKET, **{"content-length": 3})),
+    ]
+    ingest(spark, store, lines)
+    ex = MetadataQueryExecutor(spark, store)
+    before = ex.execute(MetadataQuery(BUCKET)).collect()
+    assert [r["key"] for r in before] == ["k"]
+    assert before[0]["content-length"] in (2, 3)
+
+    assert Compactor(store).compact_bucket(BUCKET, force=True)
+    staged = store.read_staging(BUCKET).collect()
+    assert sorted((r["opIndex"], r["message"]["content-length"]) for r in staged) == [
+        (op(2), 2),
+        (op(2), 3),
+    ]
+    after = ex.execute(MetadataQuery(BUCKET)).collect()
+    assert [r["key"] for r in after] == ["k"]
+    assert after[0]["content-length"] in (2, 3)
+
+
+@pytest.mark.parametrize(
+    "method,cached",
+    [("execute_collected", False), ("execute_json", False), ("execute_collected", True)],
+)
+def test_search_racing_a_purge_replans(spark, store, method, cached):
+    """A search whose plan listed landing files that a zero-tolerance
+    compaction then purges must re-plan and return the compacted rows,
+    not fail on the deleted files. The race is made deterministic by
+    compacting between the landing and staging reads of the plan. With
+    the cache on, the race hits the cache build."""
+    from clueso_spark.operators.cache import BucketCacheManager
+
+    ingest(spark, store, puts(25), interval=10)  # subpartitions 10,20,30
+    cache = BucketCacheManager(expiry_s=0.0, cleanup_delay_s=0.0) if cached else None
+    ex = MetadataQueryExecutor(spark, store, cache)
+    q = MetadataQuery(BUCKET, limit=100)
+
+    def keys():
+        out = getattr(ex, method)(q)
+        if method == "execute_json":
+            return [r["key"] for r in json.loads(out)]
+        return [r["key"] for r in out]
+
+    expected = keys()
+    assert len(expected) == 25
+
+    read_staging = store.read_staging
+    compacted = []
+
+    def compact_then_read_staging(bucket):
+        if not compacted:
+            compacted.append(Compactor(store).compact_bucket(bucket))
+        return read_staging(bucket)
+
+    store.read_staging = compact_then_read_staging
+    assert keys() == expected
+    assert compacted == [True]
+    assert store.sub_partitions("landing", BUCKET) == [30]
+    if cache is not None:
+        cache.invalidate()

@@ -161,6 +161,26 @@ def test_empty_bucket_returns_empty(spark, store):
     assert df.count() == 0
 
 
+def test_landing_only_bucket_plans_no_python_rdd_for_missing_tier(spark, store):
+    """A never-compacted bucket has no staging directory; the missing tier
+    must be an empty JVM file scan, not a Python-built DataFrame
+    (``Scan ExistingRDD``) that starts Python workers on every search."""
+    lines = [
+        wire_event(op(i), "put", BUCKET, f"k{i:02d}", put_doc(f"k{i:02d}", BUCKET))
+        for i in range(1, 6)
+    ] + [wire_event(op(6), "delete", BUCKET, "k02", put_doc("k02", BUCKET))]
+    ingest(spark, store, lines)
+    assert not store.exists(f"{store.staging}/bucket={BUCKET}")
+
+    df = executor(spark, store).execute(MetadataQuery(BUCKET))
+    rows = df.collect()
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    assert "ExistingRDD" not in plan
+    assert [r["key"] for r in rows] == ["k01", "k03", "k04", "k05"]
+
+
 def test_schema_drift_between_tiers_is_null_padded(spark):
     """Landing/staging schema drift tolerated via unionByName
     (ref: SparkUtils.scala:104-109 fillNonExistingColumns; our
@@ -208,26 +228,3 @@ def test_search_scan_prunes_nested_message_fields(spark, store):
         assert "acl" not in line and "location" not in line and "userMd" not in line, line
         assert "content-md5" in line  # result column subfields survive
 
-
-def test_executor_max_by_strategy_matches_window(spark, store):
-    """A max_by-configured executor returns the same search results as
-    the default window executor on the same store."""
-    from clueso_spark.operators.query import MetadataQuery, MetadataQueryExecutor
-    from clueso_spark.streaming.ingest import parse_events
-    from tests.conftest import op, put_doc, raw_df, wire_event
-
-    b = "mbexec"
-    lines = [
-        wire_event(op(i), "put", b, f"k{i % 7:03d}", put_doc(f"k{i % 7:03d}", b))
-        for i in range(1, 22)
-    ] + [wire_event(op(30), "delete", b, "k003", put_doc("k003", b))]
-    store.write_landing(parse_events(raw_df(spark, lines)))
-    q = MetadataQuery(b, "", limit=100)
-    win = MetadataQueryExecutor(spark, store).execute(q).collect()
-    agg = (
-        MetadataQueryExecutor(spark, store, merge_strategy="max_by")
-        .execute(q)
-        .collect()
-    )
-    assert [r.asDict() for r in win] == [r.asDict() for r in agg]
-    assert "k003" not in [r["key"] for r in win]
