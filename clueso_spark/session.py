@@ -23,6 +23,23 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half the host's RAM capped at 32g.
+
+    The driver JVM's resident size is its heap plus 1-2 GB off-heap, so a
+    heap larger than the host lets a long-lived session (a test suite, a
+    server) grow until the kernel OOM-kills the JVM: a fixed 32g did so on
+    a 16 GB host. Where the RAM size is unknown the 32g default stands.
+    """
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "32g"
+    return f"{max(1024, min(32 * 1024, ram // (2 * 1024 * 1024)))}m"
+
+
 def s3a_conf(
     endpoint: str,
     access_key: str,
@@ -77,10 +94,7 @@ def get_spark(app_name: str = "clueso-spark", **extra_conf: str) -> SparkSession
         # Spark's 1g default heap OOMs real workloads on a 32-core box.
         # Only effective at JVM launch (ignored on an existing session,
         # and on a real cluster spark-submit conf wins).
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
-        )
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -81,6 +81,27 @@ def test_env_extra_conf_parsing():
     ) == {"spark.x": "a=b"}
 
 
+def test_default_driver_memory_fits_the_host(monkeypatch):
+    """The driver heap defaults to half the host's RAM, capped at 32g, so
+    a long session cannot outgrow the host; SPARK_GRAFT_DRIVER_MEM wins."""
+    import os
+
+    from clueso_spark.session import default_driver_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    page = os.sysconf("SC_PAGE_SIZE")
+    for ram_gb, want in [(16, "8192m"), (64, "32768m"), (1, "1024m")]:
+        pages = ram_gb * 1024**3 // page
+        monkeypatch.setattr(
+            os,
+            "sysconf",
+            lambda k, pages=pages: page if k == "SC_PAGE_SIZE" else pages,
+        )
+        assert default_driver_memory() == want
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "6g")
+    assert default_driver_memory() == "6g"
+
+
 def test_env_extra_conf_warns_when_existing_session_ignores(
     spark, monkeypatch
 ):
